@@ -99,21 +99,22 @@ def _host_min_labels(pdf, src_name: str = "src", dst_name: str = "dst"):
 
 
 def _labels_from_host_pairs(
-    spark, seed: DataFrame, pdf, edge_field, union_endpoints: bool
+    spark, seed: DataFrame, pdf, id_type, union_endpoints: bool
 ) -> DataFrame:
     """Union-find the collected pairs on the driver, broadcast the (node,
     label) mapping back, and label ``seed`` with one broadcast join —
     singletons (no mapping row) label themselves, exactly as the
-    propagation seed does. ``union_endpoints`` adds the mapping keys to the
-    seed (callers whose seed already contains every edge endpoint skip the
-    extra union+distinct pass)."""
+    propagation seed does. ``id_type`` is the canonical edge columns' type,
+    the wider of the src and dst types. ``union_endpoints`` adds the
+    mapping keys to the seed (callers whose seed already contains every
+    edge endpoint skip the extra union+distinct pass)."""
     from pyspark.sql import types as T
 
     host = _host_min_labels(pdf)
     schema = T.StructType(
         [
-            T.StructField("node", edge_field.dataType, True),
-            T.StructField("__cc_label", edge_field.dataType, True),
+            T.StructField("node", id_type, True),
+            T.StructField("__cc_label", id_type, True),
         ]
     )
     mapping = spark.createDataFrame(host, schema=schema)
@@ -214,18 +215,18 @@ def connected_components(
                 "spark.graft.cc.collectMaxEdges", str(CC_COLLECT_MAX_EDGES)
             )
         )
-    edge_field = edges.schema[src_col]
+    canon = _canon(edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")))
+    # greatest/least widen mismatched src/dst types (int vs bigint) to
+    # their common type; the driver mapping must carry that wider type
+    id_type = canon.schema["src"].dataType
     if driver_collect_max_edges > 0:
-        canon = _canon(
-            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        )
         probe = canon.limit(driver_collect_max_edges + 1).toPandas()
         if len(probe) <= driver_collect_max_edges:
             labels = _labels_from_host_pairs(
                 edges.sparkSession,
                 nodes.select(F.col(node_col).alias("node")),
                 probe,
-                edge_field,
+                id_type,
                 union_endpoints=True,
             )
             return labels.withColumnRenamed("label", "cluster_id")
@@ -295,7 +296,7 @@ def connected_components(
                     edges.sparkSession,
                     seed_nodes,
                     new_e.toPandas(),
-                    edge_field,
+                    id_type,
                     union_endpoints=False,  # seed_nodes already holds every endpoint
                 )
                 return labels.withColumnRenamed("label", "cluster_id")

@@ -17,7 +17,7 @@ script files, so the equivalent checks are:
 
 Run: ``python scripts/check_integrity.py`` — prints one line per failure,
 exits non-zero on any. Every check appends to one error list, and package
-exceptions (including the registry's own window-guard RuntimeError) are
+exceptions (such as a RuntimeError raised at import) are
 REPORTED, never allowed to crash the report (review r9). No SparkSession
 is started (pure import/AST work), so this is cheap enough for CI and for
 a pre-flight orchestrator hook.
@@ -45,7 +45,7 @@ def check_imports(errors: list[str]) -> list[str]:
     """Import every package module; returns the module names walked.
 
     ``walk_packages`` without ``onerror`` PROPAGATES non-ImportError
-    exceptions (e.g. the registry's window-guard RuntimeError), which
+    exceptions (e.g. a RuntimeError raised at import), which
     would crash the report before a single FAIL line — route every
     walk-time exception into ``errors`` instead (review r9)."""
     try:

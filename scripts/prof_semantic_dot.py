@@ -53,7 +53,6 @@ def _base(spark, sf_dir, n_cells=N_IVF_CELLS):
         .select(F.col("vec_id").alias("cid"), "qe")
         .collect()
     )
-    cents = [{"cid": r["cid"], "qe": r["qe"]} for r in cents]
     assigned = emb.withColumn("cell", F.array_min(_cell_dist_arr(cents))["cid"])
     return assigned.withColumn("norm2", _dot(F.col("qe"), F.col("qe")))
 

@@ -141,11 +141,19 @@ def test_connected_components_unconverged_raises(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "src long, dst long"
     )
+    # the strict and warn contracts belong to the distributed path; the
+    # default driver union-find resolves this small chain exactly
     with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components(nodes, chain, max_iterations=1).collect()
+        connected_components(
+            nodes, chain, max_iterations=1, driver_collect_max_edges=0
+        ).collect()
     with pytest.warns(UserWarning, match="fixpoint"):
-        labels = connected_components(nodes, chain, max_iterations=1, strict=False)
+        labels = connected_components(
+            nodes, chain, max_iterations=1, strict=False, driver_collect_max_edges=0
+        )
         labels.collect()
+    exact = connected_components(nodes, chain, max_iterations=1).collect()
+    assert {r.node: r.cluster_id for r in exact} == {i: 0 for i in range(6)}
 
 
 def test_vacuum_snapshots_removes_orphans_only(spark, tmp_path):

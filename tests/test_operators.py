@@ -565,6 +565,28 @@ def test_connected_components_driver_path_matches_distributed(spark):
     assert via_driver_s == via_dist_s == {"b": "Z", "x": "Z", "Z": "Z"}
 
 
+def test_connected_components_mixed_width_ids(spark):
+    """An int src column with a bigint dst column holding ids past 2^31:
+    the driver path's (node, label) mapping takes the wider type, so it
+    labels exactly like the distributed path instead of overflowing."""
+    from fund_data_pipeline_spark.operators import graph
+
+    big = 2**31 + 5
+    nodes = spark.createDataFrame([(1,), (7,)], "node int")
+    edges = spark.createDataFrame(
+        [(1, big), (2, big), (3, 2**32 + 1)], "src int, dst bigint"
+    )
+    want = {1: 1, 2: 1, big: 1, 3: 3, 2**32 + 1: 3, 7: 7}
+    for bound in (None, 0):
+        got = {
+            r.node: r.cluster_id
+            for r in graph.connected_components(
+                nodes, edges, driver_collect_max_edges=bound
+            ).collect()
+        }
+        assert got == want, f"driver_collect_max_edges={bound}"
+
+
 def test_chunk_by_tokens_overlap_and_boundaries(spark):
     from fund_data_pipeline_spark.operators.chunking import chunk_by_tokens
 
@@ -844,9 +866,9 @@ def test_blocked_pair_cosine_arrow_matches_expression_form(spark):
     """The r16 cogrouped block-matmul pair-cosine kernel must emit exactly
     the pairs the blocked_self_join + HOF-dot + cosine-expression + filter
     composition emits, with bit-identical cosine doubles — across multiple
-    grid blocks (block_size=2 on a 7-member group), NULL vectors,
-    zero-norm vectors, and an exact-threshold pair (cosine == tau passes
-    >= on both forms)."""
+    grid blocks (block_size=2 on an 8-member group), NULL vectors,
+    zero-norm vectors, NULL blocking keys, NULL ids, and an
+    exact-threshold pair (cosine == tau passes >= on both forms)."""
     import pytest
 
     from fund_data_pipeline_spark.operators.similarity import (
@@ -866,12 +888,23 @@ def test_blocked_pair_cosine_arrow_matches_expression_form(spark):
         (8, 1, [1, 2, 3, 4]),
         (9, 1, [4, 3, 2, 1]),
         (10, 2, [11, 12, 13, 14]),  # singleton group: no pairs
+        # NULL blocking key: an equi-join never matches it, so this
+        # identical pair must not qualify
+        (11, None, [3, -5, 1000000, 7]),
+        (12, None, [3, -5, 1000000, 7]),
+        # NULL id: a.id < b.id is never true, so no pair, even with an
+        # identical cell-mate
+        (None, 0, [3, -5, 1000000, 7]),
+        (None, 1, [1, 2, 3, 4]),
     ]
     vecs = spark.createDataFrame(rows, "vec_id long, cell int, qe array<bigint>")
     vecs = vecs.withColumn("norm2", _dot(F.col("qe"), F.col("qe")))
 
-    for tau in (0.35, 1.0):  # tau=1.0 exercises the exact-threshold boundary
-        joined = blocked_self_join(vecs, ["cell"], "vec_id", 2, payload_cols=["qe", "norm2"])
+    # tau=1.0 exercises the exact-threshold boundary; string ids put a
+    # None (not NaN) into the kernel's id comparison
+    str_ids = vecs.withColumn("vec_id", F.col("vec_id").cast("string"))
+    for df, tau in ((vecs, 0.35), (vecs, 1.0), (str_ids, 0.35)):
+        joined = blocked_self_join(df, ["cell"], "vec_id", 2, payload_cols=["qe", "norm2"])
         cosine = F.when(
             (F.col("anorm") > 0) & (F.col("cnorm") > 0),
             F.col("dot").cast("double")
@@ -892,12 +925,13 @@ def test_blocked_pair_cosine_arrow_matches_expression_form(spark):
             .collect()
         )
         got_df = blocked_pair_cosine_arrow(
-            vecs, ["cell"], "vec_id", vec_col="qe", norm_col="norm2",
+            df, ["cell"], "vec_id", vec_col="qe", norm_col="norm2",
             threshold=tau, block_size=2,
         )
         assert [f.name for f in got_df.schema.fields] == ["cell", "vec_id_a", "vec_id_b", "cosine"]
         got = sorted(tuple(r) for r in got_df.collect())
-        assert got == want, f"tau={tau}"
+        assert got == want, f"tau={tau} ids={df.schema['vec_id'].dataType}"
+        assert all(None not in r[:3] for r in got)
         if tau == 1.0:
             # exactly the planted identical pair survives — note BOTH forms
             # compute its cosine as 1.0000000000000002, not 1.0 (sqrt(n)^2
@@ -1020,23 +1054,24 @@ def test_semantic_dedup_drop_rule_and_trained_codebook(spark, sf_dir):
         assert r["best_cosine"] >= SEMDEDUP_TAU
 
 
-def test_assign_cells_join_matches_literal_path(spark, sf_dir, monkeypatch):
-    """r14 verdict item 2 (the one named scale-killer): centroid assignment
-    with the codebook as DATA (one-row broadcast + transform/array_min)
-    must produce bit-identical cell ids and drop lists as the plan-literal
-    path at <= MAX_LITERAL_CELLS, and semantic_dedup must auto-switch to it
-    past the clamp — with the first-n codebook staying distributed (no
-    driver collect at any width)."""
+def test_assign_cells_arrow_matches_literal_path(spark, sf_dir, monkeypatch):
+    """The Arrow assignment kernel — semantic_dedup's one wide route — must
+    give bit-identical cell ids and drop lists to the plan-literal path,
+    resolve ties to the lowest cid, and fail loudly on an empty codebook or
+    a NULL embedding. A first-n codebook at ARROW_ASSIGN_MIN_CELLS plans
+    the kernel (never row-at-a-time Python), and a centroid list that wide
+    gives the same drops as the equivalent codebook DataFrame."""
     import contextlib
     import io
 
+    from pyspark.sql.classic.dataframe import DataFrame as _DF
+
     from fund_data_pipeline_spark.queries.registry import table
     from fund_data_pipeline_spark.queries.vectors import (
-        MAX_LITERAL_CELLS,
+        ARROW_ASSIGN_MIN_CELLS,
         _cell_dist_arr,
         _quant,
         assign_cells_arrow,
-        assign_cells_join,
         semantic_dedup,
     )
 
@@ -1051,148 +1086,63 @@ def test_assign_cells_join_matches_literal_path(spark, sf_dir, monkeypatch):
                 "cell", F.array_min(_cell_dist_arr(cb.collect()))["cid"]
             ).collect()
         }
-        joined = {r["vec_id"]: r["cell"] for r in assign_cells_join(emb, cb).collect()}
         arrow = {r["vec_id"]: r["cell"] for r in assign_cells_arrow(emb, cb).collect()}
-        assert joined == lit, f"join cell assignment diverges at k={k}"
         assert arrow == lit, f"arrow cell assignment diverges at k={k}"
 
-    # whole-operator equivalence: the same first-16 codebook through the
-    # literal path (default) and both wide paths must yield the IDENTICAL
-    # drop list
+    # whole-operator equivalence on the same first-16 codebook
     cb16 = emb.filter(F.col("vec_id") < 16).select(F.col("vec_id").alias("cid"), "qe")
     lit_drops = sorted(map(tuple, semantic_dedup(spark, sf_dir, n_cells=16).collect()))
-    for wa in ("arrow", "join", "join_sliced"):
-        wide_drops = sorted(
-            map(
-                tuple,
-                semantic_dedup(
-                    spark, sf_dir, codebook=cb16, wide_assignment=wa
-                ).collect(),
-            )
-        )
-        assert lit_drops == wide_drops and lit_drops, wa
-    with pytest.raises(ValueError, match="wide_assignment"):
-        semantic_dedup(spark, sf_dir, codebook=cb16, wide_assignment="nope")
+    assert lit_drops
+    assert sorted(map(tuple, semantic_dedup(spark, sf_dir, codebook=cb16).collect())) == lit_drops
 
-    # auto-switch past the clamp: the plan carries the one-row packed
-    # codebook broadcast (the gate-allowed BNLJ shape), not 4097 literals.
-    # blocked_self_join eagerly localCheckpoints (lineage truncates to a
-    # Scan ExistingRDD), so no-op it for the plan assertion, as the
-    # catalog-wide hygiene gate does
-    from pyspark.sql.classic.dataframe import DataFrame as _DF
-
-    with monkeypatch.context() as mp:
-        mp.setattr(_DF, "localCheckpoint", lambda self, eager=True: self)
-
-        def plan_of(df):
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            return buf.getvalue()
-
-        plan = plan_of(
-            semantic_dedup(
-                spark, sf_dir, n_cells=MAX_LITERAL_CELLS + 1, wide_assignment="join"
-            )
-        )
-        assert "BroadcastNestedLoopJoin" in plan
-        plan = plan_of(semantic_dedup(spark, sf_dir, n_cells=MAX_LITERAL_CELLS + 1))
-        assert "MapInPandas" in plan  # arrow kernel is the wide default
-        assert "BatchEvalPython" not in plan  # never row-at-a-time
-    wide = semantic_dedup(spark, sf_dir, n_cells=MAX_LITERAL_CELLS + 1)
-    for r in wide.collect():  # invariants still hold on the wide layout
-        assert r["witness_id"] < r["vec_id"]
-
-    # an explicit centroid LIST past the clamp routes through
-    # createDataFrame into the same join path as the codebook-DataFrame form
-    wide_list = [(int(r["cid"]), list(r["qe"])) for r in cb16.collect()]
-    wide_list += [
-        (MAX_LITERAL_CELLS + 1 + i, wide_list[i % 16][1]) for i in range(MAX_LITERAL_CELLS)
-    ]
-    via_list = sorted(
-        map(tuple, semantic_dedup(spark, sf_dir, centroids=wide_list).collect())
-    )
-    cb_dup = spark.createDataFrame(wide_list, "cid long, qe array<bigint>")
-    via_df = sorted(
-        map(tuple, semantic_dedup(spark, sf_dir, codebook=cb_dup).collect())
-    )
-    # duplicated centroid vectors lose every (dist, cid) tie to the original
-    # cid, so the drop list equals the 16-cell one — on both join forms
-    assert via_list == via_df == lit_drops
-
-    with pytest.raises(ValueError, match="not both"):
-        semantic_dedup(spark, sf_dir, centroids=wide_list, codebook=cb16)
-
-    # dirty-data contract (review r15): a NULL embedding fails the Arrow
-    # kernel LOUDLY with a usable message (the JVM paths let it ride with a
-    # meaningless cell, where the NULL norm keeps it out of every pair)
-    dirty = spark.createDataFrame(
-        [(0, [1] * 4), (1, None)], "vec_id long, qe array<bigint>"
-    )
-    cb4 = spark.createDataFrame([(0, [1] * 4)], "cid long, qe array<bigint>")
-    with pytest.raises(Exception, match="NULL embedding in batch"):
-        assign_cells_arrow(dirty, cb4).collect()
-    with pytest.raises(ValueError, match="empty codebook"):
-        assign_cells_arrow(dirty, cb4.filter(F.col("cid") < 0))
-    # r15 ADVICE: the JOIN path must mirror that guard — an empty codebook
-    # would otherwise collect_list an empty array, array_min yields NULL,
-    # and every vector silently lands in cell NULL (an empty drop list
-    # instead of an error)
-    from fund_data_pipeline_spark.queries.vectors import assign_cells_join
-
-    with pytest.raises(ValueError, match="empty codebook"):
-        assign_cells_join(dirty, cb4.filter(F.col("cid") < 0))
-
-
-def test_assign_cells_join_sliced_matches_unsliced(spark, sf_dir):
-    """r15 verdict item 5: the past-broadcast-size codebook-slicing path
-    (B one-row broadcasts, one chained corpus pass, row-local least over
-    per-slice (dist, cid) minima) must produce bit-identical cell ids to
-    the single-broadcast join and Arrow kernels — including ties, which
-    must resolve to the lowest cid GLOBALLY, not per-slice. Also pins the
-    clamp (n_slices > k degrades gracefully) and the empty/invalid
-    guards."""
-    from fund_data_pipeline_spark.queries.registry import table
-    from fund_data_pipeline_spark.queries.vectors import (
-        _quant,
-        assign_cells_arrow,
-        assign_cells_join,
-        assign_cells_join_sliced,
-    )
-
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", _quant("embedding").alias("qe")
-    )
-    cb = emb.filter(F.col("vec_id") < 64).select(F.col("vec_id").alias("cid"), "qe")
-    base = {r["vec_id"]: r["cell"] for r in assign_cells_join(emb, cb).collect()}
-    arrow = {r["vec_id"]: r["cell"] for r in assign_cells_arrow(emb, cb).collect()}
-    assert base == arrow
-    # B=1 routes to the unsliced kernel; B=3 (uneven slices), B=64 (one
-    # cell per slice), B=100 (clamped to k=64) all bit-identical
-    for b in (1, 3, 64, 100):
-        got = {
-            r["vec_id"]: r["cell"]
-            for r in assign_cells_join_sliced(emb, cb, n_slices=b).collect()
-        }
-        assert got == base, f"sliced assignment diverges at n_slices={b}"
-
-    # tie-break across slice boundaries: two IDENTICAL centroids land in
-    # different slices (row_number order puts cid 0 in slice 0, cid 1 in
-    # slice 1); every vector must resolve to the GLOBAL lowest cid, 0
+    # two identical centroids (listed highest cid first): every vector
+    # resolves to the lowest cid
     dup_cb = spark.createDataFrame(
-        [(0, [5, 5, 5, 5]), (1, [5, 5, 5, 5])], "cid long, qe array<bigint>"
+        [(1, [5, 5, 5, 5]), (0, [5, 5, 5, 5])], "cid long, qe array<bigint>"
     )
     vecs = spark.createDataFrame(
         [(0, [1, 2, 3, 4]), (1, [9, 9, 9, 9])], "vec_id long, qe array<bigint>"
     )
-    tied = assign_cells_join_sliced(vecs, dup_cb, n_slices=2)
-    assert {r["cell"] for r in tied.collect()} == {0}
+    assert {r["cell"] for r in assign_cells_arrow(vecs, dup_cb).collect()} == {0}
 
+    dirty = spark.createDataFrame(
+        [(0, [1] * 4), (1, None)], "vec_id long, qe array<bigint>"
+    )
+    with pytest.raises(Exception, match="NULL embedding in batch"):
+        assign_cells_arrow(dirty, dup_cb).collect()
     with pytest.raises(ValueError, match="empty codebook"):
-        assign_cells_join_sliced(vecs, dup_cb.filter(F.col("cid") < 0), n_slices=2)
-    with pytest.raises(ValueError, match="n_slices"):
-        assign_cells_join_sliced(vecs, dup_cb, n_slices=0)
+        assign_cells_arrow(dirty, dup_cb.filter(F.col("cid") < 0))
 
+    # routing: from ARROW_ASSIGN_MIN_CELLS up the first-n codebook plans the
+    # Arrow kernel; below it, literals. blocked_pair_cosine_arrow eagerly
+    # localCheckpoints (lineage truncates to a Scan ExistingRDD), so no-op
+    # it for the plan assertion, as the catalog-wide hygiene gate does
+    def plan_of(df):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        return buf.getvalue()
+
+    with monkeypatch.context() as mp:
+        mp.setattr(_DF, "localCheckpoint", lambda self, eager=True: self)
+        wide_plan = plan_of(semantic_dedup(spark, sf_dir, n_cells=ARROW_ASSIGN_MIN_CELLS))
+        narrow_plan = plan_of(semantic_dedup(spark, sf_dir, n_cells=16))
+    assert "MapInPandas" in wide_plan
+    assert "BatchEvalPython" not in wide_plan
+    assert "MapInPandas" not in narrow_plan
+
+    # a centroid LIST at the threshold takes the Arrow route too: padded
+    # with copies of the first 16 centroids under higher cids, which lose
+    # every (dist, cid) tie, so the drops equal the 16-cell ones
+    wide_list = [(int(r["cid"]), list(r["qe"])) for r in cb16.collect()]
+    wide_list += [(16 + i, wide_list[i % 16][1]) for i in range(ARROW_ASSIGN_MIN_CELLS - 16)]
+    via_list = sorted(map(tuple, semantic_dedup(spark, sf_dir, centroids=wide_list).collect()))
+    cb_wide = spark.createDataFrame(wide_list, "cid long, qe array<bigint>")
+    via_df = sorted(map(tuple, semantic_dedup(spark, sf_dir, codebook=cb_wide).collect()))
+    assert via_list == via_df == lit_drops
+
+    with pytest.raises(ValueError, match="not both"):
+        semantic_dedup(spark, sf_dir, centroids=wide_list, codebook=cb16)
 
 
 def test_train_codebook_distributed_recovers_planted_blobs(spark):
@@ -1322,8 +1272,8 @@ def test_semantic_dedup_hot_cell_is_skew_bounded_with_identical_drops(spark, sf_
     assert max_left <= 7 and max_right <= 7
 
     # the sizing helper mirrors lsh_bits_for_corpus: constant expected cell
-    # population, UNCLAMPED (r15 — past MAX_LITERAL_CELLS semantic_dedup
-    # switches to the join assignment instead of capping the codebook)
+    # population, UNCLAMPED (r15 — wide codebooks go through the Arrow
+    # assignment instead of capping the codebook)
     assert cells_for_corpus(500) == 1
     assert cells_for_corpus(1024 * 100) == 100
     assert cells_for_corpus(1024 * 100_000) == 100_000

@@ -276,15 +276,6 @@ _ONE_ROW_BNLJ_OK = {
     # |suppliers|-sized rev relation — replaces an unpartitioned window
     # that serialized every supplier through a single task
     "top_supplier_revenue",
-    # r15: crossJoins the ONE-row packed-codebook aggregate
-    # (collect_list of k centroid structs folded to a single row) over the
-    # embedding scan — O(n), the assign_cells_join kernel's documented
-    # shape; the arrow twin has no BNLJ (mapInPandas)
-    "semantic_dedup_codebook_join",
-    # r16: the sliced form chains N_SLICES_DEFAULT one-row packed-codebook
-    # broadcasts (one per slice) — each O(n), reduced row-locally; same
-    # 1-row-build shape as the unsliced join kernel, B times
-    "semantic_dedup_codebook_sliced",
 }
 
 
