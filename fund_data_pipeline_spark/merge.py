@@ -36,6 +36,15 @@ Write discipline — three layouts, one merge:
   Requires ``partition_col`` to be one of ``keys`` (true for daily tables
   keyed (entity, date)) so a key can never silently move partitions.
 
+Merge statistics cost no extra pass: every merge tags each output row with
+its action (insert / update / unchanged / keep) and counts the tags with one
+``DataFrame.observe`` on the frame it hands to the parquet writer, so the
+write job itself returns the exact :class:`MergeStats`. The observation is
+the writer's last node on every layout (after the hive path's repartition):
+there it runs in the result stage, whose task accumulator updates Spark
+applies once per partition, while a re-run shuffle-map task could count its
+rows twice.
+
 Scale notes (100 TB):
 - The join shuffles both sides by the natural key — unavoidable for a keyed
   merge without a transactional format; on a cluster, bucketed tables on the
@@ -48,11 +57,11 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import dedup_keyed
@@ -61,6 +70,13 @@ from .dedup import dedup_keyed
 #: isin literal list is replaced by a broadcast semi-join prune (a multi-year
 #: backfill would otherwise inflate the plan with thousands of literals).
 _ISIN_PRUNE_MAX = 64
+
+#: Per-row merge outcome, counted on the write: ``keep`` is a target row the
+#: batch did not touch, reported together with ``unchanged``.
+_ACTIONS = ("insert", "update", "unchanged", "keep")
+
+#: The last transform a writer applies before ``DataFrame.write``.
+Observe = Callable[[DataFrame], DataFrame]
 
 
 @dataclass
@@ -94,13 +110,20 @@ def merge_upsert(
     unconditional: bool = False,
     precedence_col: str | None = None,
     dedupe_order: Sequence[str] | None = None,
-    collect_stats: bool = False,
     partition_col: str | None = None,
     layout: str = "rename",
     allow_new_columns: bool = False,
     history: int | None = None,
 ) -> MergeStats:
     """Upsert ``source`` into the Parquet table at ``target_path``.
+
+    Returns exact counts: inserted, updated, and unchanged (matched rows
+    whose hash guard held plus target rows the batch did not touch). They
+    come from an observation on the write itself, placed as the writer's
+    last node so it runs in the write's result stage, where a retried or
+    speculative task cannot count its rows twice (module docstring). No
+    extra job runs and the merged result is not cached. A create counts the
+    rows written as inserted.
 
     - ``preserve_cols``: target wins on matched rows (e.g. ``first_seen`` — L1).
     - ``always_update_cols``: source wins on matched rows even when the hash
@@ -183,18 +206,19 @@ def merge_upsert(
             _heal_partition_backups(path, partition_col)
     exists = _table_exists(path, layout)
     if not exists:
-        # pin the source when more than one consumer will evaluate it (the
-        # stats count, the write, the touched-partition collect): without
-        # this a non-deterministic or mid-job-changing source could make
-        # the reported stats/partitions disagree with the rows actually
-        # written — the hazard the merge path's result.persist() already
-        # guards (review r11)
-        pinned = source if (not collect_stats and partition_col is None) else source.persist()
+        # the write is the source's only consumer on a flat or manifest
+        # create, so nothing is pinned; a hive create also collects its
+        # touched partitions below, and the pin keeps a non-deterministic
+        # source from reporting partitions the write did not produce.
+        # persist() returns the same object, so an identity test cannot
+        # tell whether a pin was taken: the release keys on partition_col
+        if partition_col is not None:
+            source.persist()
         try:
-            stats = MergeStats(
-                inserted=pinned.count() if collect_stats else -1, updated=0, unchanged=0
+            counted = _observed_write(
+                source, path, layout, partition_col, history, F.count(F.lit(1)).alias("n")
             )
-            _write_table(pinned, path, layout, partition_col, history)
+            stats = MergeStats(inserted=counted["n"], updated=0, unchanged=0)
             if partition_col is not None:
                 # same capped collect as the merge path below, so the create
                 # batch reports its touched partitions too (a streaming
@@ -202,7 +226,7 @@ def merge_upsert(
                 # field is absent)
                 created = [
                     r[0]
-                    for r in pinned.select(partition_col)
+                    for r in source.select(partition_col)
                     .distinct()
                     .limit(_ISIN_PRUNE_MAX + 1)
                     .collect()
@@ -210,8 +234,8 @@ def merge_upsert(
                 if len(created) <= _ISIN_PRUNE_MAX:
                     stats.touched_partitions = created
         finally:
-            if pinned is not source:
-                pinned.unpersist()
+            if partition_col is not None:
+                source.unpersist()
         return stats
 
     if partition_col is not None:
@@ -380,28 +404,46 @@ def merge_upsert(
     )
     result = joined.select(*merged_cols, action.alias("__action"))
 
-    stats = MergeStats(-1, -1, -1, touched_partitions=touched_out)
-    if collect_stats:
-        # persist across the stats pass AND the write: without it the
-        # dominant full-outer shuffle runs twice per merge, and a
-        # non-deterministic source could make the reported counts disagree
-        # with the rows actually written
-        result = result.persist()
-        try:
-            counts = {r["__action"]: r["n"] for r in result.groupBy("__action").agg(F.count(F.lit(1)).alias("n")).collect()}
-            stats = MergeStats(
-                inserted=counts.get("insert", 0),
-                updated=counts.get("update", 0),
-                unchanged=counts.get("unchanged", 0) + counts.get("keep", 0),
-                touched_partitions=touched_out,
-            )
-            _write_table(result.drop("__action"), path, layout, partition_col, history)
-        finally:
-            result.unpersist()
-        return stats
+    counted = _observed_write(
+        result,
+        path,
+        layout,
+        partition_col,
+        history,
+        *(F.count_if(F.col("__action") == a).alias(a) for a in _ACTIONS),
+        drop="__action",
+    )
+    return MergeStats(
+        inserted=counted["insert"],
+        updated=counted["update"],
+        unchanged=counted["unchanged"] + counted["keep"],
+        touched_partitions=touched_out,
+    )
 
-    _write_table(result.drop("__action"), path, layout, partition_col, history)
-    return stats
+
+def _observed_write(
+    df: DataFrame,
+    path: Path,
+    layout: str,
+    partition_col: str | None,
+    history: int | None,
+    *metrics: Column,
+    drop: str | None = None,
+) -> dict:
+    """Write ``df`` like :func:`_write_table` and return ``metrics``, the
+    aggregates of one :class:`Observation` the write itself evaluates: no
+    extra job, no cache. ``drop`` names a column only the metrics read; it
+    is removed after the observation. Every writer applies the observation
+    as its last node before the parquet writer (module docstring says why;
+    ``tests/test_plans.py`` pins it)."""
+    obs = Observation()
+
+    def observe(out: DataFrame) -> DataFrame:
+        out = out.observe(obs, *metrics)
+        return out.drop(drop) if drop is not None else out
+
+    _write_table(df, path, layout, partition_col, history, observe)
+    return obs.get
 
 
 # ---------------------------------------------------------------------------
@@ -600,17 +642,24 @@ def _table_exists(path: Path, layout: str) -> bool:
 
 
 def _write_table(
-    df: DataFrame, path: Path, layout: str, partition_col: str | None, history: int | None = None
+    df: DataFrame,
+    path: Path,
+    layout: str,
+    partition_col: str | None,
+    history: int | None = None,
+    observe: Observe | None = None,
 ) -> None:
     if layout == "manifest":
-        _manifest_write(df, path, history=history)
+        _manifest_write(df, path, history=history, observe=observe)
     elif partition_col is not None:
-        _partition_swap_write(df, path, partition_col)
+        _partition_swap_write(df, path, partition_col, observe=observe)
     else:
-        _atomic_write(df, path)
+        _atomic_write(df, path, observe=observe)
 
 
-def _atomic_write(df: DataFrame, path: Path, partition_by: str | None = None) -> None:
+def _atomic_write(
+    df: DataFrame, path: Path, partition_by: str | None = None, observe: Observe | None = None
+) -> None:
     """Write-temp-then-swap: the table directory is replaced via rename.
 
     POSIX fast path only — the two renames are not atomic as a unit and an
@@ -619,12 +668,16 @@ def _atomic_write(df: DataFrame, path: Path, partition_by: str | None = None) ->
 
     ``partition_by`` writes the staging directory hive-partitioned (the
     rollup full build) — ONE swap discipline for flat and partitioned full
-    rewrites, so crash-heal fixes can never apply to one and not the other."""
+    rewrites, so crash-heal fixes can never apply to one and not the other.
+    ``observe`` is applied directly before the writer (see
+    :func:`_observed_write`)."""
     staging = path.with_name(path.name + ".__staging__")
     backup = path.with_name(path.name + ".__old__")
     heal_backup_swap(path)
     if staging.exists():
         shutil.rmtree(staging)
+    if observe is not None:
+        df = observe(df)
     writer = df.write.mode("overwrite")
     if partition_by is not None:
         writer = writer.partitionBy(partition_by)
@@ -703,7 +756,9 @@ def heal_backup_swap(path: Path) -> None:
         shutil.rmtree(backup)
 
 
-def _manifest_write(df: DataFrame, path: Path, history: int | None = None) -> None:
+def _manifest_write(
+    df: DataFrame, path: Path, history: int | None = None, observe: Observe | None = None
+) -> None:
     """Object-store-safe swap: write a NEW immutable snapshot directory, then
     atomically repoint the small manifest pointer. The only non-idempotent
     step is a single small-file replace — atomic on POSIX (os.replace) and
@@ -719,7 +774,8 @@ def _manifest_write(df: DataFrame, path: Path, history: int | None = None) -> No
     time-travel window established by earlier merges. Passing an int sets
     AND persists the new retention. An object-store deployment would
     additionally GC after a read-grace period (in-flight readers may still
-    hold the old pointer)."""
+    hold the old pointer). ``observe`` is applied directly before the
+    writer (see :func:`_observed_write`)."""
     path.mkdir(parents=True, exist_ok=True)
     if history is None:
         history = _persisted_retention(path) or 1
@@ -728,6 +784,8 @@ def _manifest_write(df: DataFrame, path: Path, history: int | None = None) -> No
     snap = path / f"_v_{version:05d}"
     if snap.exists():
         shutil.rmtree(snap)  # failed previous attempt; manifest never pointed here
+    if observe is not None:
+        df = observe(df)
     df.write.mode("overwrite").parquet(str(snap))
     tmp = path / (MANIFEST_NAME + ".__tmp__")
     pointer = snap.name if history <= 1 else f"{snap.name}\nretention={history}"
@@ -834,14 +892,18 @@ def diff_frames(
     )
 
 
-def _partition_swap_write(df: DataFrame, path: Path, partition_col: str) -> set[str]:
+def _partition_swap_write(
+    df: DataFrame, path: Path, partition_col: str, observe: Observe | None = None
+) -> set[str]:
     """Swap ONLY the partition directories present in ``df`` into the table
     root; every other partition's files are left byte-untouched. The merge
     result contains exactly the touched partitions (pruned target subset
     full-outer source), so staging emits exactly those ``<pcol>=`` dirs.
     Returns the set of swapped partition dir names (``<pcol>=<escaped>``) so
     callers can reason about what was actually written — the staging glob is
-    the ground truth, not a second evaluation of ``df``."""
+    the ground truth, not a second evaluation of ``df``. ``observe`` is
+    applied after the repartition, directly before the writer, so the
+    observation runs in the result stage (see :func:`_observed_write`)."""
     staging = path.with_name(path.name + ".__staging__")
     if staging.exists():
         shutil.rmtree(staging)
@@ -850,9 +912,10 @@ def _partition_swap_write(df: DataFrame, path: Path, partition_col: str) -> set[
     # small files — the classic scan-killer). One task per partition is right
     # for daily-merge-sized partitions; a table with huge partitions would
     # add a within-partition split key here.
-    df.repartition(F.col(partition_col)).write.mode("overwrite").partitionBy(
-        partition_col
-    ).parquet(str(staging))
+    df = df.repartition(F.col(partition_col))
+    if observe is not None:
+        df = observe(df)
+    df.write.mode("overwrite").partitionBy(partition_col).parquet(str(staging))
     path.mkdir(parents=True, exist_ok=True)
     # heal EVERY orphaned backup first, not just this batch's partitions: a
     # crash between the two renames of some earlier batch leaves only the

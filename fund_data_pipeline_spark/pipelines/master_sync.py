@@ -135,7 +135,6 @@ def run(
         preserve_cols=("first_seen",),
         always_update_cols=("last_seen", "updated_at"),
         unconditional=True,
-        collect_stats=True,
     )
     # layout-aware read + guard: the transition rewrite is flat-layout by
     # contract; going through the public read path and the layout guard

@@ -64,10 +64,4 @@ def run(
     """One scan over the whole per-ticker landing tree, one hash-guarded merge."""
     raw = read_per_entity_csvs(spark, landing_root, infer_date=False)
     batch = hash_batch(clean(raw))
-    return merge.merge_upsert(
-        spark,
-        target_path,
-        batch,
-        PRICE_HISTORY_KEY,
-        collect_stats=True,
-    )
+    return merge.merge_upsert(spark, target_path, batch, PRICE_HISTORY_KEY)

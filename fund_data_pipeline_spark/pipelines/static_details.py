@@ -168,9 +168,7 @@ def run(
     stats: dict[str, merge.MergeStats] = {}
     try:
         for table, (fn, key) in loads.items():
-            stats[table] = merge.merge_upsert(
-                spark, f"{warehouse}/{table}", fn(cleaned), key, collect_stats=True
-            )
+            stats[table] = merge.merge_upsert(spark, f"{warehouse}/{table}", fn(cleaned), key)
     finally:
         cleaned.unpersist()
     return stats

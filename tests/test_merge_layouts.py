@@ -57,7 +57,7 @@ def test_partition_pruned_merge_leaves_other_partitions_untouched(spark, tmp_pat
         ],
     )
     stats = merge_upsert(
-        spark, str(path), batch, keys=["ticker", "dt"], partition_col="dt", collect_stats=True
+        spark, str(path), batch, keys=["ticker", "dt"], partition_col="dt"
     )
     assert stats.inserted == 1 and stats.updated == 1
 
@@ -204,7 +204,7 @@ def test_merge_null_key_target_row_is_matched_not_inserted(spark, tmp_path):
     batch = _hashed(spark, [(None, 9.0, "day5")])  # same NULL key, new value
     stats = merge_upsert(
         spark, str(path), batch, keys=["ticker"],
-        preserve_cols=["first_seen"], collect_stats=True,
+        preserve_cols=["first_seen"],
     )
     assert stats.inserted == 0 and stats.updated == 1 and stats.unchanged == 1
 
@@ -322,7 +322,7 @@ def test_backfill_prune_switches_to_semi_join(spark, tmp_path, monkeypatch):
     )
     stats = merge_upsert(
         spark, str(path), batch, keys=["ticker", "dt"],
-        partition_col="dt", collect_stats=True,
+        partition_col="dt",
     )
     assert stats.inserted == 1 and stats.updated == 4
 
@@ -890,7 +890,7 @@ def test_merge_precedence_col_stale_source_loses(spark, tmp_path):
 
     stale = _sd_snapshot(spark, [("A", "2024-01-02", 99.0)])
     stats = merge_upsert(
-        spark, path, stale, keys=["ticker"], precedence_col="sd", collect_stats=True
+        spark, path, stale, keys=["ticker"], precedence_col="sd"
     )
     assert (stats.inserted, stats.updated, stats.unchanged) == (0, 0, 1)
     row = read_table(spark, path).collect()[0]
@@ -925,7 +925,7 @@ def test_merge_precedence_col_fresh_and_null_pass(spark, tmp_path):
         ],
     )
     stats = merge_upsert(
-        spark, path, batch, keys=["ticker"], precedence_col="sd", collect_stats=True
+        spark, path, batch, keys=["ticker"], precedence_col="sd"
     )
     assert (stats.inserted, stats.updated, stats.unchanged) == (1, 3, 0)
     got = {r.ticker: (r.sd, r.value) for r in read_table(spark, path).collect()}
@@ -1007,3 +1007,112 @@ def test_pruned_merge_conforms_to_touched_partition_schema(spark, tmp_path):
     )
     out2 = {r["ticker"]: (r["value"], r["sector"]) for r in read_table(spark, str(path)).collect()}
     assert out2 == {"AAA": (10.7, "fin"), "BBB": (12.0, "tech")}
+
+
+def _live_hashes(path: Path) -> dict:
+    """(ticker, dt) -> row_hash of the table's live parquet files, read by
+    DuckDB (an engine independent of the merge under test)."""
+    import duckdb
+
+    from fund_data_pipeline_spark.merge import _live_snapshot
+
+    if not path.exists():
+        return {}
+    live = _live_snapshot(path) or path
+    rows = duckdb.sql(
+        f"SELECT ticker, CAST(dt AS VARCHAR), row_hash "
+        f"FROM read_parquet('{live}/**/*.parquet', hive_partitioning = true)"
+    ).fetchall()
+    return {(t, d): h for t, d, h in rows}
+
+
+def _recount(before: dict, after: dict, scope) -> tuple[int, int, int]:
+    """(inserted, updated, unchanged) from the table's files before and
+    after a merge, over the rows it rewrites: every row, or on the hive
+    layout the partitions in ``scope`` (the batch's dt values)."""
+    keys = [k for k in after if scope is None or k[1] in scope]
+    return (
+        sum(k not in before for k in keys),
+        sum(k in before and before[k] != after[k] for k in keys),
+        sum(k in before and before[k] == after[k] for k in keys),
+    )
+
+
+@pytest.mark.parametrize("layout", ["flat", "manifest", "hive_pruned", "hive_backfill"])
+def test_merge_stats_are_exact_on_every_layout(spark, tmp_path, monkeypatch, layout):
+    """MergeStats are counted on the write itself; on every layout and on
+    the create, merge and empty-batch paths they must equal the counts
+    worked out by hand and the DuckDB recount over the table's files before
+    and after. The batch touches dt 1-4 of dt 1-5: four partitions are
+    under _ISIN_PRUNE_MAX (isin prune) and, with the cap lowered to 2, over
+    it (broadcast semi-join prune). No merge may leave a block cached."""
+    from fund_data_pipeline_spark import merge as M
+
+    kw = {
+        "flat": {},
+        "manifest": {"layout": "manifest"},
+        "hive_pruned": {"partition_col": "dt"},
+        "hive_backfill": {"partition_col": "dt"},
+    }[layout]
+    if layout == "hive_backfill":
+        monkeypatch.setattr(M, "_ISIN_PRUNE_MAX", 2)
+    hive = "partition_col" in kw
+    path = tmp_path / layout
+    days = [f"2024-01-0{d}" for d in range(1, 6)]
+    base = [(t, d, 10.0) for t in ("A", "B", "C") for d in days]
+    batch = [
+        ("A", days[0], 11.0), ("B", days[2], 12.0),  # update
+        ("A", days[1], 10.0), ("C", days[2], 10.0),  # unchanged
+        ("D", days[0], 1.0), ("D", days[3], 2.0), ("E", days[2], 3.0),  # insert
+    ]
+    # target rows the batch leaves alone ("keep", reported as unchanged):
+    # all 11 on a full rewrite, the 8 in dt 1-4 on the hive layout
+    expected = [
+        (base, (15, 0, 0)),
+        (batch, (3, 2, 2 + (8 if hive else 11))),
+        ([], (0, 0, 0 if hive else 18)),
+    ]
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    held = cached().size()
+    for rows, want in expected:
+        before = _live_hashes(path)
+        stats = merge_upsert(
+            spark, str(path), _snapshot(spark, rows), keys=["ticker", "dt"], **kw
+        )
+        got = (stats.inserted, stats.updated, stats.unchanged)
+        scope = {d for _, d, _ in rows} if hive else None
+        assert got == want == _recount(before, _live_hashes(path), scope), (rows, got)
+        assert cached().size() == held  # the hive create's pin is released
+
+
+def test_merge_runs_no_stats_pass(spark, tmp_path, monkeypatch):
+    """One merge into an existing flat table caches nothing and starts no
+    more Spark jobs than the observed write needs (job-id range of the
+    status tracker, as the benchmark counts them). The persisted stats pass
+    this replaced held the merged result in the cache during the write and
+    started 8 jobs here; the observed write starts 5."""
+    path = tmp_path / "jobs"
+    days = ["2024-01-01", "2024-01-02"]
+    base = _snapshot(spark, [(t, d, 1.0) for t in "ABC" for d in days])
+    merge_upsert(spark, str(path), base, keys=["ticker", "dt"])
+    batch = _snapshot(spark, [("A", days[0], 2.0), ("B", days[1], 1.0), ("Z", days[0], 3.0)])
+
+    # relative to what the session already holds, so a block another test
+    # left cached cannot fail this one
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    held = cached().size()
+    cached_at_write = []
+    write_prop = type(batch).write
+
+    def write(df):
+        cached_at_write.append(cached().size())
+        return write_prop.fget(df)
+
+    monkeypatch.setattr(type(batch), "write", property(write))
+    tracker = spark.sparkContext.statusTracker()
+    first = max(tracker.getJobIdsForGroup(None), default=-1)
+    stats = merge_upsert(spark, str(path), batch, keys=["ticker", "dt"])
+    jobs = [j for j in tracker.getJobIdsForGroup(None) if j > first]
+    assert (stats.inserted, stats.updated, stats.unchanged) == (1, 1, 5)
+    assert cached_at_write == [held] and cached().size() == held
+    assert len(jobs) <= 5, jobs

@@ -255,9 +255,8 @@ def test_allocations_load_without_holdings_feed(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "wh" / "stg_allocations")).count() == 1
 
 
-def test_summary_reports_wall_time_and_uncollected_counts():
-    """summary_lines: the -1 MergeStats sentinel prints as 'counts not
-    collected', and TOTAL uses run_all's recorded wall time (stage-duration
+def test_summary_reports_wall_time():
+    """summary_lines: TOTAL uses run_all's recorded wall time (stage-duration
     sum overstates concurrent groups) — review r9."""
     import time
 
@@ -265,11 +264,41 @@ def test_summary_reports_wall_time_and_uncollected_counts():
 
     def slow_ok():
         time.sleep(0.3)
-        return MergeStats(-1, -1, -1)
+        return MergeStats(0, 0, 0)
 
     report = orchestrator.run_all([[("a", slow_ok), ("b", slow_ok)]])
-    text = "\n".join(report.summary_lines())
-    assert "counts not collected" in text and "+-1" not in text
     assert report.wall_sec is not None
+    assert f"in {report.wall_sec:.1f}s;" in report.summary_lines()[-1]
     # two 0.3s stages ran concurrently: wall must be well under their sum
     assert report.wall_sec < sum(s.duration_sec for s in report.stages)
+
+
+def test_concurrent_merges_report_their_own_counts(spark, tmp_path):
+    """Two merges in one concurrent run_all group each count their actions
+    with their own Observation; the counts must not mix across threads."""
+    from fund_data_pipeline_spark import merge
+
+    def batch(rows):
+        df = spark.createDataFrame(rows, "ticker string, value double")
+        return df.withColumn("row_hash", F.md5(F.col("value").cast("string")))
+
+    def upsert(table, rows):
+        return lambda: merge.merge_upsert(spark, str(tmp_path / table), batch(rows), ["ticker"])
+
+    a0 = [(f"A{i}", 1.0) for i in range(6)]
+    b0 = [(f"B{i}", 1.0) for i in range(3)]
+    # a: 2 inserts, 1 update, 1 unchanged + 4 kept; b: 1 insert, 3 updates
+    a1 = [("A0", 2.0), ("A1", 1.0), ("A8", 1.0), ("A9", 1.0)]
+    b1 = [("B0", 2.0), ("B1", 2.0), ("B2", 2.0), ("B9", 1.0)]
+    report = orchestrator.run_all([
+        [("create_a", upsert("a", a0)), ("create_b", upsert("b", b0))],
+        [("merge_a", upsert("a", a1)), ("merge_b", upsert("b", b1))],
+    ])
+    assert report.ok
+    got = {st.name: st.tables[st.name] for st in report.stages}
+    assert {n: (s.inserted, s.updated, s.unchanged) for n, s in got.items()} == {
+        "create_a": (6, 0, 0),
+        "create_b": (3, 0, 0),
+        "merge_a": (2, 1, 5),
+        "merge_b": (1, 3, 0),
+    }

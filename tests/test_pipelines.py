@@ -71,19 +71,19 @@ def test_daily_nav_merge_idempotent(spark, tmp_path):
     target = str(tmp_path / "stg_daily_nav")
     raw = _nav_raw(spark, [("AAA", "FUND", "yf", "10.0", "USD", "2024-03-01", "2024-03-01")])
     batch = daily_nav.prepare_load(daily_nav.clean(raw))
-    s1 = merge.merge_upsert(spark, target, batch, ["ticker", "asset_type", "source", "as_of_date"], collect_stats=True)
+    s1 = merge.merge_upsert(spark, target, batch, ["ticker", "asset_type", "source", "as_of_date"])
     assert s1.inserted == 1
     first = spark.read.parquet(target).collect()
 
     # identical re-run: hash guard elides the update, updated_at untouched
-    s2 = merge.merge_upsert(spark, target, batch, ["ticker", "asset_type", "source", "as_of_date"], collect_stats=True)
+    s2 = merge.merge_upsert(spark, target, batch, ["ticker", "asset_type", "source", "as_of_date"])
     assert (s2.inserted, s2.updated, s2.unchanged) == (0, 0, 1)
     assert spark.read.parquet(target).collect() == first
 
     # changed price: exactly one update
     raw2 = _nav_raw(spark, [("AAA", "FUND", "yf", "11.0", "USD", "2024-03-01", "2024-03-02")])
     batch2 = daily_nav.prepare_load(daily_nav.clean(raw2))
-    s3 = merge.merge_upsert(spark, target, batch2, ["ticker", "asset_type", "source", "as_of_date"], collect_stats=True)
+    s3 = merge.merge_upsert(spark, target, batch2, ["ticker", "asset_type", "source", "as_of_date"])
     assert (s3.inserted, s3.updated) == (0, 1)
     assert str(spark.read.parquet(target).first().nav_price) == "11.0000"
 
@@ -233,8 +233,8 @@ def test_dividends_clean_and_merge(spark, tmp_path):
 
     target = str(tmp_path / "stg_dividend_history")
     key = ["ticker", "asset_type", "source", "ex_date", "payment_date", "amount", "type"]
-    s1 = merge.merge_upsert(spark, target, dividends.hash_batch(cleaned), key, collect_stats=True)
-    s2 = merge.merge_upsert(spark, target, dividends.hash_batch(cleaned), key, collect_stats=True)
+    s1 = merge.merge_upsert(spark, target, dividends.hash_batch(cleaned), key)
+    s2 = merge.merge_upsert(spark, target, dividends.hash_batch(cleaned), key)
     assert s1.inserted == 1 and s2.unchanged == 1 and s2.updated == 0
 
 
@@ -437,7 +437,7 @@ def test_repair_feed_merges_repaired_rows(spark, tmp_path):
         )
 
     stats = repair.repair_feed(
-        spark, target, reprocess, keys=["ticker"], repair_log_path=log, collect_stats=True
+        spark, target, reprocess, keys=["ticker"], repair_log_path=log
     )
     assert (stats.n_failed, stats.n_repaired) == (3, 2)
     assert (stats.merge.inserted, stats.merge.updated, stats.merge.unchanged) == (0, 2, 2)
@@ -453,7 +453,7 @@ def test_repair_feed_merges_repaired_rows(spark, tmp_path):
 
     # perfect-run path: repairing again finds the 1 still-unverdicted row,
     # reprocess can't fix it, merge is a no-op on values
-    stats2 = repair.repair_feed(spark, target, reprocess, keys=["ticker"], collect_stats=True)
+    stats2 = repair.repair_feed(spark, target, reprocess, keys=["ticker"])
     assert (stats2.n_failed, stats2.n_repaired) == (1, 0)
 
 
@@ -825,7 +825,7 @@ def test_merge_stats_reports_touched_partitions(spark, tmp_path):
     assert sorted(s1.touched_partitions) == ["2024-01", "2024-02"]
     s2 = merge_upsert(
         spark, path, batch([("C", "2024-02", 3.0)]),
-        keys=["ticker", "dt"], partition_col="dt", collect_stats=True,
+        keys=["ticker", "dt"], partition_col="dt",
     )
     assert s2.touched_partitions == ["2024-02"] and s2.inserted == 1
     # unpartitioned merges don't collect partition values

@@ -364,3 +364,66 @@ def test_bpe_round_relations_plan_hygiene(spark, sf_dir):
         return buf.getvalue().count("Exchange ")
 
     assert n_exchanges(applied) == n_exchanges(vocab)
+
+
+def _ancestors_of(node, name: str, above: tuple = ()):
+    """Yield the ancestor node names of every ``name`` node of a physical
+    plan, descending into adaptive plans (their current physical plan)."""
+    here = node.nodeName()
+    if here == name:
+        yield above
+    if here.startswith("AdaptiveSparkPlan"):
+        kids = [node.executedPlan()]
+    else:
+        seq = node.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    for kid in kids:
+        yield from _ancestors_of(kid, name, above + (here,))
+
+
+@pytest.mark.parametrize("layout", ["flat", "manifest", "hive_pruned", "hive_backfill"])
+def test_merge_observation_is_the_writers_last_node(spark, tmp_path, monkeypatch, layout):
+    """merge_upsert counts its MergeStats with an Observation on the frame
+    each layout hands to the parquet writer. There it runs in the write's
+    result stage, where Spark applies each partition's accumulator update
+    once; under an Exchange it would run in a shuffle-map stage, where a
+    retried or speculative task's update can be applied twice. So on the
+    create and the merge path no Exchange may sit above the plan's one
+    CollectMetrics node (on the hive layout: the observation must follow
+    the writer's repartition)."""
+    from fund_data_pipeline_spark import merge as M
+
+    kw = {
+        "flat": {},
+        "manifest": {"layout": "manifest"},
+        "hive_pruned": {"partition_col": "dt"},
+        "hive_backfill": {"partition_col": "dt"},
+    }[layout]
+    if layout == "hive_backfill":
+        monkeypatch.setattr(M, "_ISIN_PRUNE_MAX", 1)  # 2 touched dates: semi-join prune
+
+    def batch(value):
+        df = spark.createDataFrame(
+            [("A", "2024-01-01", value), ("B", "2024-01-02", 1.0)],
+            "ticker string, dt string, value double",
+        )
+        return df.withColumn("row_hash", F.md5(F.col("value").cast("string")))
+
+    placements = []
+    frame_cls = type(spark.range(1))
+    write_prop = frame_cls.write
+
+    def write(df):
+        plan = df._jdf.queryExecution().executedPlan()
+        placements.append(list(_ancestors_of(plan, "CollectMetrics")))
+        return write_prop.fget(df)
+
+    monkeypatch.setattr(frame_cls, "write", property(write))
+    path = str(tmp_path / layout)
+    M.merge_upsert(spark, path, batch(1.0), keys=["ticker", "dt"], **kw)  # create
+    stats = M.merge_upsert(spark, path, batch(2.0), keys=["ticker", "dt"], **kw)
+    assert (stats.inserted, stats.updated, stats.unchanged) == (0, 1, 1)
+    assert len(placements) == 2
+    for ancestors in placements:
+        assert len(ancestors) == 1, ancestors
+        assert not [n for n in ancestors[0] if "Exchange" in n], ancestors
